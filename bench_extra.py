@@ -96,51 +96,11 @@ def run_pipeline(sf_dir: str, reps: int = 2) -> None:
         timed("rollup_tool_1h", lambda: tiers["rollup_tool_1h"].count())
         stage["TOTAL"] = round(time.time() - t_all0, 3)
         results.append(stage)
-        # unpersist so next rep re-runs from scratch (no cross-run caching)
-        tiers["_slim"].unpersist(True)
-        if "_tagged" in tiers:
-            tiers["_tagged"].unpersist(True)
+        # unpersist every frame build_tiers persisted, so the next rep
+        # re-runs from scratch (no cross-run caching)
+        for v in tiers.values():
+            v.unpersist(True)
     print(json.dumps({"sf": sf_dir, "n_turns": n_turns, "runs": results}, indent=1))
-    spark.stop()
-
-
-def run_pipeline_sub(sf_dir: str) -> None:
-    """Finer isolation: time the sub-stages of the fused-kernel chain with
-    noop sinks (guide §1.4) so each transformation is measured alone."""
-    from pyspark.sql import functions as F
-
-    from olympian_spark.operators.rollup import rollup_tiers_fused
-    from olympian_spark.plans.pipeline import QcParams, qc_flags
-    from olympian_spark.sources.transcripts import transcripts_from_events
-
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = _spark(cores)
-    sc = spark.sparkContext
-    params = QcParams(dip_high=60.0, dip_max=1800.0)
-    stage: dict[str, float] = {}
-
-    def timed(name, df):
-        sc.setJobDescription(f"sub {name}")
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        stage[name] = round(time.time() - t0, 3)
-
-    t = transcripts_from_events(spark, sf_dir)
-    t.count()
-    pre = t.select(
-        "conv_id", "turn_idx", "ts", "role", "tool",
-        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("float").alias("text_len"),
-    )
-    timed("a_pre(scan+turnidx window)", pre)
-    slim = qc_flags(pre, params).select(
-        "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-    )
-    timed("b_slim(qc windows)", slim)
-    tagged = rollup_tiers_fused(slim, fail_flag_col="flag_dip")
-    timed("c_tagged(full fused kernel)", tagged)
-    tagged_nosplit = rollup_tiers_fused(slim, fail_flag_col="flag_dip", max_chunk_rows=None)
-    timed("d_tagged_no_skewguard", tagged_nosplit)
-    print(json.dumps({"sf": sf_dir, "stages": stage}, indent=1))
     spark.stop()
 
 
@@ -184,8 +144,6 @@ if __name__ == "__main__":
         run_queries(sf_dir, int(sys.argv[3]) if len(sys.argv) > 3 else 3)
     elif mode == "pipeline":
         run_pipeline(sf_dir)
-    elif mode == "pipeline_sub":
-        run_pipeline_sub(sf_dir)
     elif mode == "explain":
         run_explain(sf_dir, sys.argv[3] if len(sys.argv) > 3 else "plans/r06/_work")
     else:

@@ -1,4 +1,4 @@
-"""Rollup tier cascade: 1m -> 1h -> 1d continuous aggregates.
+"""Rollup tiers: 1m / 1h / 1d continuous aggregates in one streaming kernel.
 
 Semantics (SURVEY §2.9, north star):
 
@@ -6,26 +6,27 @@ Semantics (SURVEY §2.9, north star):
 - measures: n_turns, n_qc_fail, counts/sums/means of turn_gap_s and
   text_len, **exact p95** of turn_gap_s via the reference quantile kernel
   (f32 linear interpolation, sct.rs:70-103) — never percentile_approx;
-- QC-before-rollup: rows whose fail_flag column == Flag.FAIL are excluded
-  from measures but counted in n_qc_fail (Warn rows are retained — the
+- QC-before-rollup: rows whose flag_dip == Flag.FAIL are excluded from
+  measures but counted in n_qc_fail (Warn rows are retained — the
   reference treats Warn as "inside warning threshold", not rejection);
 - every tier carries a Gorilla block of its member (ts, turn_gap, text_len)
-  points, so each coarser tier is refreshed *from the finer tier alone*:
+  points, so a coarser tier can be refreshed *from the finer tier alone*:
   decomposable measures add up partial sums (float64 accumulate -> f32,
   deterministic at f32 precision), p95 re-computes from decoded blocks.
 
 Execution shape (the scale story):
 
-- Arrow kernels are **chunked**: one group = one (conv_id, chunk) where the
-  chunk is a coarse calendar unit (default week), and the kernel emits one
-  row per member bucket. This amortizes Spark's per-group and pandas'
-  per-DataFrame overhead over hundreds of buckets — the difference between
-  18k kernel calls and 300 at sf-small, and between 10^9 and 10^7 calls at
-  10^12 turns.
-- a hot conversation splits across chunks, so kernel groups stay bounded
-  (one conv-week); the pure-relational dimension rollups absorb skew via
-  map-side partial aggregation, and :func:`salted_agg` provides two-stage
-  aggregation for demonstrably-equivalent skew handling on arbitrary keys.
+- :func:`rollup_tiers_fused` emits all three day-nested grains from ONE
+  exchange on (conv_id, day) and ONE whole-partition Arrow stream; the hour
+  and day sums reuse the finer grain's f32 partials, so they equal what
+  :func:`rollup_coarser` would compute from the materialized finer tier.
+  A hot conversation splits into its day segments, so worker memory is
+  bounded by one (conv, day) plus one batch.
+- :func:`rollup_coarser` builds calendar grains (month and up) from
+  ``tier_1d`` with the same partial-sum decomposition.
+- the pure-relational dimension rollups absorb skew via map-side partial
+  aggregation, and :func:`salted_agg` provides two-stage aggregation for
+  demonstrably-equivalent skew handling on arbitrary keys.
 """
 
 from __future__ import annotations
@@ -40,7 +41,6 @@ from olympian_spark.functions.gorilla import (
     decode_block,
     encode_block,
     encode_blocks,
-    encode_singleton_blocks,
 )
 from olympian_spark.oracle.quantile import compute_quantile, compute_quantile_segmented
 
@@ -90,72 +90,8 @@ def _restore_bucket(df: DataFrame) -> DataFrame:
     ]
     return df.select(*cols)
 
+
 _GRAIN = {"minute": "minute", "hour": "hour", "day": "day", "week": "week", "month": "month"}
-
-# Skew guard for the grouped Arrow kernels: one (conv, chunk_grain) group is
-# one task, so a pathological conversation holding tens of millions of turns
-# in a single week would otherwise become the stage's straggler (or OOM it).
-# Groups above this row count are re-chunked at DAY boundaries (SURVEY §4).
-# 2M rows ≈ 60-130 MB of kernel input per group — bounded task memory while
-# keeping the count far above anything a real conversation produces
-# (2M turns/week = 3.3 turns/s sustained for 7 days).
-_DEFAULT_MAX_CHUNK_ROWS = 2_000_000
-
-# output grains that nest inside a calendar day: for these, splitting a
-# chunk at UTC day boundaries never splits an output bucket, so the split
-# output is bit-identical to the unsplit output
-_DAY_NESTED_GRAINS = {"minute", "hour", "day"}
-
-# Fixed-µs grain periods (UTC session): date_trunc of these grains equals
-# ts_us - ts_us % period, so the kernel derives the bucket from _ts_us
-# instead of shipping a second 8-byte column across the kernel exchange
-# (~15% of that exchange's row width). week/month stay column-based
-# (week is Monday-anchored, month is irregular).
-_FIXED_GRAIN_US = {
-    "minute": 60_000_000,
-    "hour": 3_600_000_000,
-    "day": 86_400_000_000,
-}
-
-
-def _skew_split_chunk(base: DataFrame, max_chunk_rows: int | None) -> DataFrame:
-    """Re-chunk pathological (conv_id, _chunk) groups at UTC day boundaries.
-
-    ``base`` must carry ``conv_id``, ``_chunk`` (chunk-grain-truncated µs)
-    and ``_ts_us`` (event time µs). Groups with more than ``max_chunk_rows``
-    rows get ``_chunk`` replaced by the row's day truncation, bounding every
-    kernel group by the conversation's single-day volume (the finest split
-    that keeps all day-nested output buckets whole — a hotter single DAY is
-    irreducible without splitting output buckets).
-
-    Scale shape: the hot-key detection is a map-side-combined count on
-    (conv_id, _chunk) — the shuffle moves one row per conversation-chunk —
-    and the hot set is bounded by total_rows / max_chunk_rows keys (at 10^12
-    turns and the 2M default, ≤ 500k keys), so it broadcasts. Day keys from
-    a hot week cannot collide with other weeks' keys (weeks are disjoint and
-    a week key IS its Monday's day key, which only re-appears if that very
-    week was split — consistently, for every row of the group).
-    """
-    if not max_chunk_rows:
-        return base
-    hot = (
-        base.groupBy("conv_id", "_chunk")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > max_chunk_rows)
-        .select("conv_id", "_chunk", F.lit(True).alias("_hot"))
-    )
-    # pmod (floor-mod) — NOT `%` (sign-of-dividend): for pre-epoch
-    # timestamps the split boundary must match the kernel's numpy floor-mod
-    # day truncation, or one UTC day's rows straddle two split keys and a
-    # day-nested bucket is emitted from two kernel groups (duplicate rows).
-    day_of_row = F.col("_ts_us") - F.pmod(F.col("_ts_us"), F.lit(_DAY_US))
-    return (
-        base.join(F.broadcast(hot), ["conv_id", "_chunk"], "left")
-        .withColumn(
-            "_chunk", F.when(F.col("_hot").isNotNull(), day_of_row).otherwise(F.col("_chunk"))
-        )
-        .drop("_hot")
-    )
 
 
 def _npcol(tbl: "pa.Table", name: str) -> np.ndarray:
@@ -177,9 +113,7 @@ def _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok) -> "pa.Table":
     faithful to the oracle) and the Gorilla block encode. NaN doubles as the
     NULL marker for the f32 measure columns (legit values are always finite).
 
-    ``conv`` is either a scalar conversation key (single-group kernels) or a
-    pre-taken pyarrow array with one entry per bucket (the multi-group
-    streaming kernel) — the arithmetic is identical either way.
+    ``conv`` is a pyarrow array with one conversation key per bucket.
     """
     nb = starts.size - 1
     counts = np.diff(starts).astype(np.int64)
@@ -224,7 +158,7 @@ def _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok) -> "pa.Table":
         mean_tl[sidx] = t0
 
     # the loop keeps ONLY the f32 pairwise sums (np.sum's summation order is
-    # part of the bit-exactness contract with the cascade; a segmented
+    # part of the bit-exactness contract with the oracle; a segmented
     # sequential reduction would round differently)
     for k in np.flatnonzero(n_ok_arr > 1):
         lo, hi = starts[k], starts[k + 1]
@@ -244,7 +178,7 @@ def _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok) -> "pa.Table":
         {
             # conv key passes through as-is: string conv_id, or int64 when
             # the caller dictionary-encoded conversation keys upstream
-            "conv_id": conv if isinstance(conv, pa.Array) else pa.array([conv] * nb),
+            "conv_id": conv,
             "bucket_us": pa.array(bucket_out),
             "n_turns": pa.array(counts),
             "n_qc_fail": pa.array(n_fail_arr),
@@ -260,178 +194,68 @@ def _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok) -> "pa.Table":
     )
 
 
-def rollup_1m(
-    df: DataFrame,
-    fail_flag_col: str | None = "flag_dip",
-    grain: str = "minute",
-    chunk_grain: str = "week",
-    max_chunk_rows: int | None = _DEFAULT_MAX_CHUNK_ROWS,
-) -> DataFrame:
-    """Finest tier from raw turns.
-
-    Input: transcripts with turn metrics (turn_gap_s, text_len) and QC flag
-    columns. One shuffle on (conv_id, chunk); the Arrow-native kernel
-    (applyInArrow: no pandas materialization, numpy views over Arrow
-    buffers) walks the chunk's member buckets in turn order and emits one
-    tier row per bucket. NULL gap (first turn) is carried as NaN so the
-    turn's text_len still lands in the block; the quantile kernel drops
-    non-finite exactly like the reference (sct.rs:71-75).
-
-    ``max_chunk_rows`` bounds kernel group size under conversation skew via
-    day-aligned re-chunking (:func:`_skew_split_chunk`) — bit-identical
-    output for day-nested ``grain``s; pass None to disable.
-    """
-    ts = F.col("ts").cast("timestamp")
-    fail = (
-        (F.col(fail_flag_col) == int(Flag.FAIL)).cast("int")
-        if fail_flag_col
-        else F.lit(0)
-    )
-    grain_us = _FIXED_GRAIN_US.get(_GRAIN[grain])
-    base = df.select(
-        "conv_id",
-        *(
-            []
-            if grain_us
-            else [F.unix_micros(F.date_trunc(_GRAIN[grain], ts)).alias("bucket_us")]
-        ),
-        F.unix_micros(F.date_trunc(_GRAIN[chunk_grain], ts)).alias("_chunk"),
-        F.col("turn_idx"),
-        F.unix_micros(ts).alias("_ts_us"),
-        F.col("turn_gap_s"),
-        F.col("text_len"),
-        fail.alias("_is_fail"),
-    )
-
-    def kernel(tbl: "pa.Table") -> "pa.Table":
-        # ts is monotone in turn_idx per conversation, so sorting by turn_idx
-        # also orders buckets; bucket boundaries come from one vectorized diff
-        conv = tbl.column("conv_id")[0].as_py()
-        order = np.argsort(_npcol(tbl, "turn_idx"), kind="stable")
-        ts_us = _npcol(tbl, "_ts_us").astype(np.int64, copy=False)[order]
-        # fixed-µs grains derive the bucket in-kernel (== date_trunc in a
-        # UTC session; numpy % is floor-mod so pre-1970 stays correct) —
-        # the 8-byte bucket column never crosses the exchange
-        buckets = (
-            ts_us - ts_us % grain_us
-            if grain_us
-            else _npcol(tbl, "bucket_us").astype(np.int64, copy=False)[order]
-        )
-        gaps = _f32col(tbl, "turn_gap_s")[order]  # NULL -> NaN
-        tl = _f32col(tbl, "text_len")[order]
-        ok = (_npcol(tbl, "_is_fail") != 1)[order]
-        n = buckets.size
-        starts = np.concatenate(
-            ([0], np.flatnonzero(buckets[1:] != buckets[:-1]) + 1, [n])
-        )
-        return _tier_table(conv, buckets, starts, ts_us, gaps, tl, ok)
-
-    if _GRAIN[grain] in _DAY_NESTED_GRAINS:
-        base = _skew_split_chunk(base, max_chunk_rows)
-    return _restore_bucket(
-        _kernel_input(base, "conv_id", "_chunk")
-        .groupBy("conv_id", "_chunk")
-        .applyInArrow(kernel, _tier_schema_us(df))
-    )
-
-
-def rollup_coarser(tier: DataFrame, grain: str, chunk_grain: str | None = None) -> DataFrame:
-    """Coarser tier from a finer tier (1m -> 1h, 1h -> 1d).
+def rollup_coarser(tier: DataFrame, grain: str) -> DataFrame:
+    """Coarser tier from a finer tier — month and coarser from ``tier_1d``.
 
     Decomposable measures combine the finer tier's partial sums/counts
     (float64 accumulate, cast to f32 — order differences vanish below f32
     precision); exact p95 and the tier's own Gorilla block come from
     decoding + concatenating member blocks in bucket order. One shuffle on
-    (conv_id, chunk); the Arrow-native kernel emits one row per coarse
-    bucket.
+    (conv_id, coarse bucket); each kernel group IS one output row, so a
+    calendar bucket can never be emitted twice.
     """
-    chunk_grain = chunk_grain or "week"
     bs = F.col("bucket_start")
     base = tier.select(
         "conv_id",
         F.unix_micros(bs).alias("bucket_us"),
         "n_turns",
         "n_qc_fail",
-        "n_gap_obs",
         "n_valid_gap",
         "sum_gap",
         "sum_text_len",
         "block",
         F.unix_micros(F.date_trunc(_GRAIN[grain], bs)).alias("_coarse"),
-        F.unix_micros(F.date_trunc(_GRAIN[chunk_grain], bs)).alias("_chunk"),
     )
 
     def kernel(tbl: "pa.Table") -> "pa.Table":
-        conv = tbl.column("conv_id")[0].as_py()
         order = np.argsort(_npcol(tbl, "bucket_us"), kind="stable")
-        coarse = _npcol(tbl, "_coarse").astype(np.int64, copy=False)[order]
-        n_turns_a = _npcol(tbl, "n_turns").astype(np.int64, copy=False)[order]
-        n_fail_a = _npcol(tbl, "n_qc_fail").astype(np.int64, copy=False)[order]
-        n_valid_a = _npcol(tbl, "n_valid_gap").astype(np.int64, copy=False)[order]
-        sum_gap_col = tbl.column("sum_gap")
-        if sum_gap_col.null_count:
-            sum_gap_col = sum_gap_col.fill_null(float("nan"))
-        sum_gap_a = sum_gap_col.to_numpy(zero_copy_only=False).astype(np.float64)[order]
-        sum_tl_a = _npcol(tbl, "sum_text_len").astype(np.int64, copy=False)[order]
         blocks_in = tbl.column("block").to_pylist()
-        blocks_in = [blocks_in[i] for i in order]
-        n = coarse.size
-        starts = np.concatenate(
-            ([0], np.flatnonzero(coarse[1:] != coarse[:-1]) + 1, [n])
-        )
-        nb = starts.size - 1
-
-        out_bucket = coarse[starts[:-1]]
-        out_turns = np.add.reduceat(n_turns_a, starts[:-1]).astype(np.int64)
-        out_fail = np.add.reduceat(n_fail_a, starts[:-1]).astype(np.int64)
-        out_valid = np.add.reduceat(n_valid_a, starts[:-1]).astype(np.int64)
-        out_sum_tl = np.add.reduceat(sum_tl_a, starts[:-1]).astype(np.int64)
-        out_sum_gap = np.full(nb, np.nan, F32)
-        out_mean_gap = np.full(nb, np.nan, F32)
-        out_p95 = np.full(nb, np.nan, F32)
-        out_gap_obs = np.zeros(nb, np.int64)
-        out_mean_tl = np.full(nb, np.nan, F32)
-        out_blocks = []
-        for k in range(nb):
-            lo, hi = starts[k], starts[k + 1]
-            decoded = [decode_block(bytes(b)) for b in blocks_in[lo:hi]]
-            ts_us = np.concatenate([d[0] for d in decoded])
-            gaps = np.concatenate([d[1][0] for d in decoded])
-            tl = np.concatenate([d[1][1] for d in decoded])
-            out_blocks.append(encode_block(ts_us, [gaps, tl]))
-            n_ok = tl.size
-            finite = np.isfinite(gaps)
-            out_gap_obs[k] = int(n_ok - finite.sum())
-            nv = int(out_valid[k])
-            if nv:
-                # partial+final decomposition: f64 accumulate of f32 partials
-                sg = F32(np.nansum(sum_gap_a[lo:hi]))
-                out_sum_gap[k] = sg
-                out_mean_gap[k] = F32(sg / F32(nv))
-                out_p95[k] = compute_quantile(0.95, gaps[finite])
-            if n_ok:
-                out_mean_tl[k] = F32(F32(np.sum(tl, dtype=F32)) / F32(n_ok))
-
+        decoded = [decode_block(bytes(blocks_in[i])) for i in order]
+        ts_us = np.concatenate([d[0] for d in decoded])
+        gaps = np.concatenate([d[1][0] for d in decoded])
+        tl = np.concatenate([d[1][1] for d in decoded])
+        finite = np.isfinite(gaps)
+        n_ok = tl.size
+        n_valid = int(_npcol(tbl, "n_valid_gap").sum())
+        sum_gap = mean_gap = p95 = mean_tl = None
+        if n_valid:
+            # partial+final decomposition: f64 accumulate of f32 partials
+            sum_gap = F32(np.nansum(_f32col(tbl, "sum_gap").astype(np.float64)[order]))
+            mean_gap = F32(sum_gap / F32(n_valid))
+            p95 = compute_quantile(0.95, gaps[finite])
+        if n_ok:
+            mean_tl = F32(F32(np.sum(tl, dtype=F32)) / F32(n_ok))
+        f32 = pa.float32()
         return pa.table(
             {
-                "conv_id": pa.array([conv] * nb),
-                "bucket_us": pa.array(out_bucket),
-                "n_turns": pa.array(out_turns),
-                "n_qc_fail": pa.array(out_fail),
-                "n_gap_obs": pa.array(out_gap_obs),
-                "n_valid_gap": pa.array(out_valid),
-                "sum_gap": pa.array(out_sum_gap, from_pandas=True),
-                "mean_gap": pa.array(out_mean_gap, from_pandas=True),
-                "p95_gap": pa.array(out_p95, from_pandas=True),
-                "sum_text_len": pa.array(out_sum_tl),
-                "mean_text_len": pa.array(out_mean_tl, from_pandas=True),
-                "block": pa.array(out_blocks, pa.binary()),
+                "conv_id": tbl.column("conv_id").slice(0, 1),
+                "bucket_us": pa.array([_npcol(tbl, "_coarse")[0]], pa.int64()),
+                "n_turns": pa.array([_npcol(tbl, "n_turns").sum()], pa.int64()),
+                "n_qc_fail": pa.array([_npcol(tbl, "n_qc_fail").sum()], pa.int64()),
+                "n_gap_obs": pa.array([n_ok - int(finite.sum())], pa.int64()),
+                "n_valid_gap": pa.array([n_valid], pa.int64()),
+                "sum_gap": pa.array([sum_gap], f32),
+                "mean_gap": pa.array([mean_gap], f32),
+                "p95_gap": pa.array([p95], f32),
+                "sum_text_len": pa.array([_npcol(tbl, "sum_text_len").sum()], pa.int64()),
+                "mean_text_len": pa.array([mean_tl], f32),
+                "block": pa.array([encode_block(ts_us, [gaps, tl])], pa.binary()),
             }
         )
 
     return _restore_bucket(
-        _kernel_input(base, "conv_id", "_chunk")
-        .groupBy("conv_id", "_chunk")
+        _kernel_input(base, "conv_id", "_coarse")
+        .groupBy("conv_id", "_coarse")
         .applyInArrow(kernel, _tier_schema_us(tier))
     )
 
@@ -447,31 +271,23 @@ def _coarse_tier_from_rows(
     gaps: np.ndarray,
     tl: np.ndarray,
     ok: np.ndarray,
-    fine_cb: np.ndarray,
     fine_sum_gap: np.ndarray,
     fine_sum_tl: np.ndarray,
-    starts: np.ndarray | None = None,
-    fstarts: np.ndarray | None = None,
+    starts: np.ndarray,
+    fstarts: np.ndarray,
 ) -> "pa.Table":
-    """Coarse tier rows computed from raw member rows + finer-tier partials,
-    bit-identical to ``rollup_coarser`` over the materialized finer tier:
+    """Coarse tier rows computed from raw member rows + finer-tier partials:
     sum_gap/mean_gap use the f64-accumulate-of-f32-partials decomposition
     (NOT a direct f32 row sum), sum_text_len sums the finer integer
     partials, while p95 / blocks / mean_text_len recompute from the rows —
-    exactly the arithmetic rollup_coarser performs on decoded blocks.
+    the same arithmetic ``rollup_coarser`` performs on decoded blocks.
 
-    ``row_cb``: per-row coarse bucket (sorted, contiguous groups);
-    ``fine_cb``: per-finer-bucket coarse bucket (same grouping order).
-    ``conv`` is a scalar key or a per-coarse-bucket pyarrow array; ``starts``
-    / ``fstarts`` override the value-change boundary detection for
-    multi-conversation inputs (where equal adjacent bucket values can belong
-    to different conversations and boundaries must include the key change).
+    ``row_cb``: per-row coarse bucket; ``starts``: row boundaries of the
+    coarse buckets; ``fstarts``: the same boundaries over the finer tier's
+    rows. Boundaries include conversation changes (equal adjacent bucket
+    values can belong to different conversations). ``conv`` is a pyarrow
+    array with one key per coarse bucket.
     """
-    n = row_cb.size
-    if starts is None:
-        starts = np.concatenate(
-            ([0], np.flatnonzero(row_cb[1:] != row_cb[:-1]) + 1, [n])
-        )
     nb = starts.size - 1
     counts = np.diff(starts).astype(np.int64)
     csum_ok = np.concatenate(([0], np.cumsum(ok.astype(np.int64))))
@@ -479,10 +295,6 @@ def _coarse_tier_from_rows(
     n_fail_arr = counts - n_ok_arr
     bucket_out = row_cb[starts[:-1]]
 
-    if fstarts is None:
-        fstarts = np.concatenate(
-            ([0], np.flatnonzero(fine_cb[1:] != fine_cb[:-1]) + 1, [fine_cb.size])
-        )
     sum_gap64 = fine_sum_gap.astype(np.float64)
     out_sum_tl = np.add.reduceat(fine_sum_tl, fstarts[:-1]).astype(np.int64)
 
@@ -523,7 +335,7 @@ def _coarse_tier_from_rows(
 
     # the loop keeps ONLY the order-sensitive reductions: the f64 nansum of
     # fine partials (pairwise summation is part of the bit-exactness
-    # contract with rollup_coarser) and the f32 pairwise mean_tl sum
+    # contract with the oracle) and the f32 pairwise mean_tl sum
     for k in np.flatnonzero(n_ok_arr2 > 1):
         lo, hi = starts[k], starts[k + 1]
         m = ok[lo:hi]
@@ -537,7 +349,7 @@ def _coarse_tier_from_rows(
 
     return pa.table(
         {
-            "conv_id": conv if isinstance(conv, pa.Array) else pa.array([conv] * nb),
+            "conv_id": conv,
             "bucket_us": pa.array(bucket_out),
             "n_turns": pa.array(counts),
             "n_qc_fail": pa.array(n_fail_arr),
@@ -557,11 +369,9 @@ def _fused_process(tbl: "pa.Table") -> "pa.Table":
     """All three tier grains for a sorted multi-conversation Arrow table.
 
     Input rows are sorted by (conv_id, day, turn_idx) and contain only
-    COMPLETE (conv_id, day) segments. Per-bucket arithmetic is identical to
-    the old single-group fused kernel (slices of the same arrays fed to the
-    same numpy ops), so output is bit-identical — segment membership only
-    decides which rows are visible to one call, and every output bucket
-    (minute/hour/day) nests inside a single day.
+    COMPLETE (conv_id, day) segments. Every output bucket (minute/hour/day)
+    nests inside a single day, so how the stream is cut into calls at
+    segment boundaries never changes a bucket's rows or its arithmetic.
     """
     import pyarrow.compute as pc
 
@@ -596,7 +406,7 @@ def _fused_process(tbl: "pa.Table") -> "pa.Table":
     fstarts_h = bounds((seg_m[1:] != seg_m[:-1]) | (hb_m[1:] != hb_m[:-1]), hb_m.size)
     conv_h = conv_flat.take(pa.array(starts_h[:-1]))
     t_h = _coarse_tier_from_rows(
-        conv_h, row_h, ts_us, gaps, tl, ok, hb_m,
+        conv_h, row_h, ts_us, gaps, tl, ok,
         _f32col(t_m, "sum_gap"),
         _npcol(t_m, "sum_text_len").astype(np.int64, copy=False),
         starts=starts_h, fstarts=fstarts_h,
@@ -610,7 +420,7 @@ def _fused_process(tbl: "pa.Table") -> "pa.Table":
     fstarts_d = bounds((seg_h[1:] != seg_h[:-1]) | (db_h[1:] != db_h[:-1]), db_h.size)
     conv_d = conv_flat.take(pa.array(starts_d[:-1]))
     t_d = _coarse_tier_from_rows(
-        conv_d, day, ts_us, gaps, tl, ok, db_h,
+        conv_d, day, ts_us, gaps, tl, ok,
         _f32col(t_h, "sum_gap"),
         _npcol(t_h, "sum_text_len").astype(np.int64, copy=False),
         starts=starts_d, fstarts=fstarts_d,
@@ -624,59 +434,23 @@ def _fused_process(tbl: "pa.Table") -> "pa.Table":
     return pa.concat_tables([tag(t_m, 0), tag(t_h, 1), tag(t_d, 2)])
 
 
-def rollup_tiers_fused(
-    df: DataFrame,
-    fail_flag_col: str | None = "flag_dip",
-    chunk_grain: str = "week",
-    max_chunk_rows: int | None = _DEFAULT_MAX_CHUNK_ROWS,
-    assume_clustered: bool = False,
-) -> DataFrame:
+def rollup_tiers_fused(df: DataFrame) -> DataFrame:
     """All three tiers (1m/1h/1d) in ONE shuffle + ONE streaming kernel pass.
 
-    The cascade (rollup_1m -> rollup_coarser x2) costs three shuffles and
-    two materialization barriers; one pass over day-segmented turns can emit
-    all three grains. Output is the tier schema plus a ``_grain`` tag
-    (0=minute, 1=hour, 2=day); rows are bit-identical to the cascade's
-    (tested), because the coarse levels reuse the finer level's f32
-    partial sums exactly as rollup_coarser does.
+    Input: turns with ``turn_gap_s``, ``text_len`` and the ``flag_dip`` QC
+    flag. Output is the tier schema plus a ``_grain`` tag (0=minute,
+    1=hour, 2=day); the coarse grains reuse the finer grain's f32 partial
+    sums, the contract ``rollup_coarser`` follows for calendar grains.
 
-    Execution (round 6): a whole-partition ``mapInArrow`` stream replaces the
-    per-group ``applyInArrow`` channel. Rows are hash-partitioned AND sorted
-    by (conv_id, day, turn_idx); the kernel processes every complete
-    (conv, day) segment of each Arrow batch vectorized across segments,
-    holding back only the trailing incomplete segment. This removes
-
-    - the per-group Python channel overhead (one kernel invocation per
-      (conv, week) group -> one per ~64k-row batch),
-    - the in-kernel per-group argsort (rows arrive sorted), and
-    - the skew-guard pre-pass entirely (``_skew_split_chunk``'s extra
-      aggregation + broadcast join): day segments are already the finest
-      output-preserving split, so worker memory is bounded by one
-      (conv, day) + one batch with no hot-key detection needed.
-
-    ``chunk_grain`` / ``max_chunk_rows`` are retained for API compatibility;
-    the streaming kernel always processes day-aligned segments (output for
-    any day-aligned chunking is bit-identical), so they no longer affect
-    the result or the execution shape.
-
-    ``assume_clustered=True`` (guide §2.4: remove shuffles outright) skips
-    the kernel's own repartition+sort when the CALLER guarantees the input
-    is already hash-partitioned by conv_id with each partition sorted by
-    (conv_id, turn_idx) — exactly what the stage-1 QC window stage emits.
-    The whole QC+tier path then runs on ONE exchange. This is an
-    order-dependent contract the planner cannot check: passing an
-    arbitrarily-ordered frame with it set yields duplicate bucket rows, so
-    it stays opt-in (``build_tiers`` sets it for its own pinned lineage;
-    AQE partition COALESCING is safe — merged partitions concatenate whole
-    hash partitions, keeping conversations contiguous and sorted).
+    Execution: rows are hash-partitioned AND sorted by (conv_id, day,
+    turn_idx), and a whole-partition ``mapInArrow`` stream processes every
+    complete (conv, day) segment of each Arrow batch vectorized across
+    segments, holding back only the trailing incomplete segment. That means
+    one kernel invocation per ~64k-row batch, no in-kernel sort, and no
+    hot-key detection: day segments are the finest output-preserving split,
+    so worker memory is bounded by one (conv, day) + one batch.
     """
-    ts = F.col("ts").cast("timestamp")
-    fail = (
-        (F.col(fail_flag_col) == int(Flag.FAIL)).cast("int")
-        if fail_flag_col
-        else F.lit(0)
-    )
-    ts_us_col = F.unix_micros(ts)
+    ts_us_col = F.unix_micros(F.col("ts").cast("timestamp"))
     base = df.select(
         "conv_id",
         # day key via pmod — explicitly the kernel's numpy floor-mod rule,
@@ -687,7 +461,7 @@ def rollup_tiers_fused(
         ts_us_col.alias("_ts_us"),
         F.col("turn_gap_s"),
         F.col("text_len"),
-        fail.alias("_is_fail"),
+        (F.col("flag_dip") == int(Flag.FAIL)).cast("int").alias("_is_fail"),
     )
 
     def stream_kernel(batches):
@@ -724,14 +498,6 @@ def rollup_tiers_fused(
             yield from _fused_process(pending.combine_chunks()).to_batches()
 
     schema = _tier_schema_us(df) + ", _grain tinyint"
-    if assume_clustered:
-        # ride the caller's existing (conv_id-partitioned, turn-ordered)
-        # layout: no exchange, no sort — the kernel's day segmentation works
-        # on any conversation-contiguous, time-ordered stream
-        out = base.select(
-            "conv_id", "_ts_us", "turn_gap_s", "text_len", "_is_fail"
-        ).mapInArrow(stream_kernel, schema)
-        return _restore_bucket(out)
     n_part = 2 * df.sparkSession.sparkContext.defaultParallelism
     out = (
         base.repartition(n_part, "conv_id", "_chunk")
@@ -774,12 +540,11 @@ def rollup_dims_fused(
     Output: (dim_kind, bucket_start, dim_value, n_turns, mean_text_len);
     per-kind slices equal :func:`rollup_by_dimension` exactly (tested).
 
-    MEASURED DECISION (round 2, 16M turns / 32 cores): when the input is
-    already persisted, this LOSES to one groupBy per dimension by ~3x —
-    the explode doubles the rows entering partial aggregation, while the
-    saved input scan is just a cache read. Use only when the input is not
-    materialized (straight off an expensive scan) and the dimension list
-    is long; ``build_tiers`` deliberately does NOT use it.
+    Wins when the input is NOT materialized, as in ``build_tiers``: one
+    scan instead of one per dimension. Over an already-persisted input it
+    LOSES to one groupBy per dimension by ~3x (round 2, 16M turns / 32
+    cores) — the explode doubles the rows entering partial aggregation,
+    while the saved input scan is just a cache read.
     """
     bucket = F.date_trunc(_GRAIN[grain], F.col("ts").cast("timestamp"))
     pairs = F.array(

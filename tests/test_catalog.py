@@ -42,17 +42,20 @@ def _table_state(cat, table):
 def test_incremental_refresh_equals_full(spark, tmp_path):
     full, first, split = _split_by_day(spark)
 
+    def refresh(*args, **kw):
+        # a refresh releases every frame it persisted
+        before = spark._jsc.getPersistentRDDs().size()
+        refresh_tiers(spark, *args, params=PARAMS, **kw)
+        assert spark._jsc.getPersistentRDDs().size() == before
+
     # incremental: commit first half, then the rest arrives
     cat_inc = ParquetManifestCatalog(spark, str(tmp_path / "inc"))
-    refresh_tiers(spark, cat_inc, first, watermark="wm1", params=PARAMS)
-    refresh_tiers(
-        spark, cat_inc, full, watermark="wm2", since_watermark=f"{split} 23:59:59.999999",
-        params=PARAMS,
-    )
+    refresh(cat_inc, first, watermark="wm1")
+    refresh(cat_inc, full, watermark="wm2", since_watermark=f"{split} 23:59:59.999999")
 
     # oracle: one-shot full refresh
     cat_full = ParquetManifestCatalog(spark, str(tmp_path / "full"))
-    refresh_tiers(spark, cat_full, full, watermark="wm2", params=PARAMS)
+    refresh(cat_full, full, watermark="wm2")
 
     for table in TIER_TABLES:
         a = _table_state(cat_inc, table)

@@ -5,8 +5,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from olympian_spark.datagen import gen_transcripts
-from olympian_spark.operators.rollup import rollup_1m, rollup_coarser
-from olympian_spark.plans.pipeline import QcParams, qc_flags
+from olympian_spark.operators.rollup import rollup_coarser
+from olympian_spark.plans.pipeline import QcParams, build_tiers
 
 
 def test_bucketed_join_eliminates_exchange(spark, tmp_path):
@@ -45,14 +45,16 @@ def test_bucketed_join_eliminates_exchange(spark, tmp_path):
 
 def test_month_grain_tier(spark):
     """Calendar-month rollup from the day tier (chronoutil RelativeDuration
-    parity: month buckets are calendar-aware, not fixed seconds)."""
+    parity: month buckets are calendar-aware, not fixed seconds), one row
+    per (conv_id, month) even when a month spans several weeks."""
     df = spark.createDataFrame(gen_transcripts(5_000, 20, seed=4).to_pandas())
-    flagged = qc_flags(df, QcParams(dip_high=300, dip_max=1200))
-    t1d = rollup_1m(flagged, grain="day", chunk_grain="month")
-    t1mo = rollup_coarser(t1d, "month", chunk_grain="month")
-    rows = t1mo.collect()
+    tiers = build_tiers(df, QcParams(dip_high=300, dip_max=1200), persist=False)
+    rows = rollup_coarser(tiers["tier_1d"], "month").collect()
+    tiers["_sorted"].unpersist()
     assert rows
     for r in rows:
         assert r.bucket_start.day == 1  # month buckets anchor at the 1st
-    # totals conserved through the cascade
+    keys = [(r.conv_id, r.bucket_start) for r in rows]
+    assert len(set(keys)) == len(keys), "duplicate month rows"
+    # totals conserved through the tiers
     assert sum(r.n_turns for r in rows) == 5_000

@@ -1,9 +1,11 @@
-"""Tier cascade correctness (Tier B/C):
+"""Tier correctness (Tier B/C):
 
-- tier_1m bit-matches an independent pandas/numpy oracle (f32 mean/p95)
+- every column of tier_1m/1h/1d, Gorilla block bytes included, bit-matches
+  an independent pandas/numpy oracle; 1h/1d sum_gap follows the documented
+  partial-sum contract (f64 sum of the finer tier's f32 sum_gap)
 - 1h sums == sum of member 1m sums; 1d == sum of member 1h sums
-- 1h/1d p95 bit-match the oracle quantile over the raw passing gaps
 - QC-before-rollup: FAIL rows excluded from measures, counted in n_qc_fail
+- pre-epoch day routing, int64 conversation keys, the plan's exchange budget
 - salted two-stage agg == plain groupBy
 """
 
@@ -14,12 +16,19 @@ from pyspark.sql import functions as F
 
 from olympian_spark.datagen import gen_transcripts
 from olympian_spark.flags import Flag
-from olympian_spark.operators.rollup import salted_agg
+from olympian_spark.functions.gorilla import encode_block
+from olympian_spark.operators.rollup import (
+    rollup_coarser,
+    rollup_tiers_fused,
+    salted_agg,
+)
 from olympian_spark.oracle.quantile import compute_quantile
-from olympian_spark.plans.pipeline import QcParams, build_tiers
+from olympian_spark.plans.pipeline import QcParams, build_tiers, qc_flags
 
 F32 = np.float32
 PARAMS = QcParams(dip_high=300.0, dip_max=1200.0)
+MINUTE_US, HOUR_US, DAY_US = 60_000_000, 3_600_000_000, 86_400_000_000
+SLIM_COLS = ("conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip")
 
 
 @pytest.fixture(scope="module")
@@ -31,7 +40,19 @@ def tiers(spark):
         k: out[k].toPandas()
         for k in ("turns_flagged", "tier_1m", "tier_1h", "tier_1d")
     }
+    for k in ("_tagged", "_dims", "_sorted"):
+        out[k].unpersist()
     return pdf, collected
+
+
+@pytest.fixture(scope="module")
+def oracle_tiers(tiers):
+    pdf, _ = tiers
+    turns = _oracle_turns(pdf)
+    t1m = _oracle_tier(turns, MINUTE_US)
+    t1h = _oracle_tier(turns, HOUR_US, finer=t1m)
+    t1d = _oracle_tier(turns, DAY_US, finer=t1h)
+    return {"tier_1m": t1m, "tier_1h": t1h, "tier_1d": t1d}
 
 
 def _us(series):
@@ -75,44 +96,90 @@ def test_stage1_flags_match_oracle(tiers):
     assert (merged["flag_dip_o"] == merged["flag_dip_s"]).all()
 
 
-def test_tier_1m_matches_oracle(tiers):
-    pdf, got = tiers
-    oracle = _oracle_turns(pdf)
-    oracle["bucket"] = (oracle["ts_us"] // 60_000_000) * 60_000_000
-    t1m = got["tier_1m"].copy()
-    t1m["bucket"] = _us(t1m["bucket_start"])
+_INT_COLS = ("n_turns", "n_qc_fail", "n_gap_obs", "n_valid_gap", "sum_text_len")
+_F32_COLS = ("sum_gap", "mean_gap", "p95_gap", "mean_text_len")
 
-    exp = {}
-    for (conv, bucket), g in oracle.groupby(["conv_id", "bucket"]):
-        ok = g[g["flag_dip"] != int(Flag.FAIL)]
-        gaps = ok["gap"].to_numpy(F32)
-        valid = gaps[np.isfinite(gaps)]
-        exp[(conv, bucket)] = dict(
-            n_turns=len(g),
-            n_qc_fail=int((g["flag_dip"] == int(Flag.FAIL)).sum()),
-            n_valid=len(valid),
-            mean_gap=(
-                F32(F32(np.sum(valid, dtype=F32)) / F32(len(valid)))
-                if len(valid)
-                else None
-            ),
-            p95=compute_quantile(0.95, valid) if len(valid) else None,
+
+def _oracle_tier(turns, grain_us, finer=None):
+    """Expected tier rows {(conv_id, bucket_us): row} at one grain.
+
+    Every bucket recomputes from its raw passing rows in turn order — except
+    sum_gap at 1h/1d, where the documented partial-sum contract applies: the
+    finer tier's f32 sum_gap values, accumulated in f64 in bucket order
+    (np.nansum), rounded to f32. NaN marks a NULL f32 measure.
+    """
+    members = {}
+    for conv, fb in sorted(finer or ()):
+        members.setdefault((conv, fb - fb % grain_us), []).append(
+            finer[(conv, fb)]["sum_gap"]
         )
-    assert len(t1m) == len(exp)
-    n_fail_total = 0
-    for r in t1m.itertuples():
-        e = exp[(r.conv_id, r.bucket)]
-        assert r.n_turns == e["n_turns"]
-        assert r.n_qc_fail == e["n_qc_fail"]
-        assert r.n_valid_gap == e["n_valid"]
-        if e["mean_gap"] is None:
-            assert pd.isna(r.mean_gap)
+    ts_all = turns["ts_us"].to_numpy(np.int64)
+    bucket = ts_all - ts_all % grain_us  # numpy floor-mod: pre-epoch safe
+    gap_all = turns["gap"].to_numpy(F32)
+    tl_all = turns["tl"].to_numpy(F32)
+    fail_all = turns["flag_dip"].to_numpy() == int(Flag.FAIL)
+    groups = pd.DataFrame({"conv_id": turns["conv_id"], "bucket": bucket}).groupby(
+        ["conv_id", "bucket"], sort=False
+    ).indices
+    exp = {}
+    for (conv, b), idx in groups.items():  # idx: the bucket's rows in turn order
+        ok = idx[~fail_all[idx]]
+        ts, gaps, tl = ts_all[ok], gap_all[ok], tl_all[ok]
+        valid = gaps[np.isfinite(gaps)]
+        nv = valid.size
+        if finer is None:
+            sum_gap = F32(np.sum(valid, dtype=F32))
         else:
-            # bit-exact f32
-            assert F32(r.mean_gap).view(np.uint32) == e["mean_gap"].view(np.uint32)
-            assert F32(r.p95_gap).view(np.uint32) == e["p95"].view(np.uint32)
-        n_fail_total += r.n_qc_fail
-    assert n_fail_total > 0, "fixture too tame: no QC fails"
+            sum_gap = F32(np.nansum(np.array(members[(conv, b)], np.float64)))
+        exp[(conv, int(b))] = dict(
+            n_turns=idx.size,
+            n_qc_fail=idx.size - ok.size,
+            n_gap_obs=ok.size - nv,
+            n_valid_gap=nv,
+            sum_gap=sum_gap if nv else F32(np.nan),
+            mean_gap=F32(sum_gap / F32(nv)) if nv else F32(np.nan),
+            p95_gap=compute_quantile(0.95, valid) if nv else F32(np.nan),
+            sum_text_len=int(tl.astype(np.int64).sum()),
+            mean_text_len=(
+                F32(F32(np.sum(tl, dtype=F32)) / F32(ok.size)) if ok.size else F32(np.nan)
+            ),
+            block=encode_block(ts, [gaps, tl]),
+        )
+    return exp
+
+
+def _assert_tier_matches_oracle(got, exp):
+    keys = list(zip(got["conv_id"], _us(got["bucket_start"])))
+    assert len(set(keys)) == len(keys), "duplicate (conv_id, bucket_start) rows"
+    assert set(keys) == set(exp)
+    cols = {c: got[c].to_numpy() for c in (*_INT_COLS, *_F32_COLS, "block")}
+    for i, key in enumerate(keys):
+        e = exp[key]
+        for c in _INT_COLS:
+            assert cols[c][i] == e[c], (key, c)
+        for c in _F32_COLS:
+            g, x = F32(cols[c][i]), e[c]
+            if np.isnan(x):
+                assert np.isnan(g), (key, c)  # NULL
+            else:
+                assert g.view(np.uint32) == x.view(np.uint32), (key, c)
+        assert bytes(cols["block"][i]) == e["block"], (key, "block")
+
+
+def test_tier_1m_matches_oracle(tiers, oracle_tiers):
+    _, got = tiers
+    _assert_tier_matches_oracle(got["tier_1m"], oracle_tiers["tier_1m"])
+    assert got["tier_1m"]["n_qc_fail"].sum() > 0, "fixture too tame: no QC fails"
+
+
+def test_tier_1h_matches_oracle(tiers, oracle_tiers):
+    _, got = tiers
+    _assert_tier_matches_oracle(got["tier_1h"], oracle_tiers["tier_1h"])
+
+
+def test_tier_1d_matches_oracle(tiers, oracle_tiers):
+    _, got = tiers
+    _assert_tier_matches_oracle(got["tier_1d"], oracle_tiers["tier_1d"])
 
 
 def _check_tier_consistency(fine, coarse, trunc):
@@ -181,56 +248,6 @@ def test_salted_agg_equivalence(spark):
     assert np.allclose(plain["s"], salted["s"], rtol=1e-12)
 
 
-def test_fused_tiers_bit_identical_to_cascade(spark):
-    """rollup_tiers_fused must reproduce the explicit 1m->1h->1d cascade
-    bit-for-bit on every column including f32 measures and block bytes:
-    the fused kernel reuses the finer tier's f32 partial sums exactly as
-    rollup_coarser does (f64 accumulate of f32 partials)."""
-    from olympian_spark.operators.rollup import (
-        rollup_1m,
-        rollup_coarser,
-        rollup_tiers_fused,
-    )
-    from olympian_spark.plans.pipeline import qc_flags
-
-    df = spark.createDataFrame(gen_transcripts(30_000, 60, seed=11).to_pandas())
-    flagged = qc_flags(df, QcParams(dip_high=300.0, dip_max=1200.0))
-    slim = flagged.select(
-        "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-    )
-
-    tagged = rollup_tiers_fused(slim).persist()
-    t1m_c = rollup_1m(slim).persist()
-    cascade = {
-        0: t1m_c,
-        1: rollup_coarser(t1m_c, "hour").persist(),
-    }
-    cascade[2] = rollup_coarser(cascade[1], "day")
-
-    import numpy as np
-
-    for g, casc in cascade.items():
-        a = (
-            tagged.filter(f"_grain = {g}").drop("_grain")
-            .orderBy("conv_id", "bucket_start").toPandas()
-        )
-        b = casc.orderBy("conv_id", "bucket_start").toPandas()
-        assert len(a) == len(b) and len(a) > 0, f"grain {g}: row count"
-        for col in a.columns:
-            av, bv = a[col].to_numpy(), b[col].to_numpy()
-            if av.dtype == np.float32:
-                assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (
-                    f"grain {g} col {col} not bit-equal"
-                )
-            else:
-                assert (
-                    (a[col].isna() & b[col].isna()) | (a[col] == b[col])
-                ).all(), f"grain {g} col {col} mismatch"
-    tagged.unpersist()
-    t1m_c.unpersist()
-    cascade[1].unpersist()
-
-
 def test_fused_dims_equal_per_dimension_rollups(spark):
     """rollup_dims_fused slices must equal rollup_by_dimension exactly."""
     from olympian_spark.operators.rollup import rollup_by_dimension, rollup_dims_fused
@@ -253,192 +270,72 @@ def test_fused_dims_equal_per_dimension_rollups(spark):
     dims.unpersist()
 
 
-def test_int64_key_cascade_matches_string_key(spark):
-    """rollup_coarser must honour int64 conv keys (the dictionary-encoded
-    path COVERAGE.md advertises): the explicit 1m->1h->1d cascade run with
-    int64 keys bit-matches the string-key cascade after key remap. Guards
-    the kernels' conv_id output arrays against a hard-coded string type —
-    round-2's rollup_coarser regression was exactly that."""
-    from olympian_spark.operators.rollup import rollup_1m, rollup_coarser
-    from olympian_spark.plans.pipeline import qc_flags
-
-    df = spark.createDataFrame(gen_transcripts(8_000, 24, seed=7).to_pandas())
-    flagged = qc_flags(df, PARAMS)
-    slim = flagged.select(
-        "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-    ).persist()
-    # deterministic string -> int64 dictionary encoding
-    mapping = slim.select("conv_id").distinct().withColumn(
-        "conv_int", F.xxhash64("conv_id")
-    ).persist()
-    slim_int = (
-        slim.join(F.broadcast(mapping), "conv_id")
+def _remap_conv(df, mapping):
+    return (
+        df.join(F.broadcast(mapping), "conv_id")
         .drop("conv_id")
         .withColumnRenamed("conv_int", "conv_id")
     )
 
-    def cascade(src):
-        t1m = rollup_1m(src).persist()
-        t1h = rollup_coarser(t1m, "hour").persist()
-        t1d = rollup_coarser(t1h, "day")
-        return t1m, t1h, t1d
 
-    str_tiers = cascade(slim)
-    int_tiers = cascade(slim_int)
-    for grain, (ts_df, ti_df) in enumerate(zip(str_tiers, int_tiers)):
-        assert dict(ti_df.dtypes)["conv_id"] == "bigint", f"grain {grain} key type"
-        a = (
-            ts_df.join(F.broadcast(mapping), "conv_id")
-            .drop("conv_id")
-            .withColumnRenamed("conv_int", "conv_id")
-            .orderBy("conv_id", "bucket_start")
-            .toPandas()
-        )
-        b = ti_df.orderBy("conv_id", "bucket_start").toPandas()[a.columns]
-        assert len(a) == len(b) > 0, f"grain {grain}: rows"
-        for col in a.columns:
-            av, bv = a[col].to_numpy(), b[col].to_numpy()
-            if av.dtype == np.float32:
-                assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (
-                    f"grain {grain} col {col} not bit-equal"
-                )
-            else:
-                assert (
-                    (a[col].isna() & b[col].isna()) | (a[col] == b[col])
-                ).all(), f"grain {grain} col {col} mismatch"
-    for d in (*str_tiers[:2], *int_tiers[:2], slim, mapping):
-        d.unpersist()
-
-
-def test_skew_split_bounds_groups_and_is_bit_identical(spark):
-    """Day-aligned sub-chunking of hot (conv, week) kernel groups (SURVEY §4,
-    the 100x-scale straggler/OOM guard): with one conversation holding ~20%
-    of all turns inside a single week, a tiny max_chunk_rows must (a) split
-    that conversation's week into multiple bounded kernel groups and (b)
-    leave every tier output row bit-identical to the unsplit run — all three
-    emitted grains nest in a day, so day-aligned splits never cut an output
-    bucket."""
-    from olympian_spark.operators.rollup import (
-        _DAY_US,
-        _skew_split_chunk,
-        rollup_tiers_fused,
-    )
-    from olympian_spark.plans.pipeline import qc_flags
-
-    # span_days=5 -> the hot conv's turns land inside one calendar week
-    pdf = gen_transcripts(30_000, 40, seed=17, hot_conv_share=0.20, span_days=5.0)
-    df = spark.createDataFrame(pdf.to_pandas())
-    slim = qc_flags(df, PARAMS).select(
-        "conv_id", "turn_idx", "ts", "turn_gap_s", "text_len", "flag_dip"
-    )
-
-    # (a) the split itself: hot conv -> several day chunks, each bounded
-    ts = F.col("ts").cast("timestamp")
-    base = slim.select(
-        "conv_id",
-        F.unix_micros(F.date_trunc("week", ts)).alias("_chunk"),
-        F.unix_micros(ts).alias("_ts_us"),
-    )
-    split = _skew_split_chunk(base, max_chunk_rows=500)
-    per_group = split.groupBy("conv_id", "_chunk").count().collect()
-    hot_conv = "conv_000000"  # gen_transcripts makes conv 0 the hot one
-    hot_groups = [r for r in per_group if r.conv_id == hot_conv]
-    assert len(hot_groups) > 1, "hot conv-week was not split"
-    # day-aligned: every split chunk key is a UTC day boundary
-    assert all(r._chunk % _DAY_US == 0 for r in hot_groups)
-    # bounded by the conv's single-day volume (5 days of data -> each day
-    # well under the unsplit 6000-row week)
-    assert max(r["count"] for r in hot_groups) < 6000
-    # convs below the threshold keep their week chunks untouched
-    orig_counts = base.groupBy("conv_id", "_chunk").count().collect()
-    cold = {
-        r.conv_id
-        for r in orig_counts
-        if all(c["count"] <= 500 for c in orig_counts if c.conv_id == r.conv_id)
-    }
-    assert cold, "fixture needs some sub-threshold convs"
-    n_cold_split = split.filter(F.col("conv_id").isin(list(cold))).select(
-        "conv_id", "_chunk"
-    ).distinct().count()
-    n_cold_orig = sum(1 for r in orig_counts if r.conv_id in cold)
-    assert n_cold_split == n_cold_orig
-
-    # (b) bit-identical tiers
-    a = (
-        rollup_tiers_fused(slim, max_chunk_rows=500)
-        .orderBy("conv_id", "bucket_start", "_grain")
-        .toPandas()
-    )
-    b = (
-        rollup_tiers_fused(slim, max_chunk_rows=None)
-        .orderBy("conv_id", "bucket_start", "_grain")
-        .toPandas()
-    )
-    assert len(a) == len(b) > 0
+def _assert_frames_bit_equal(a, b, what):
+    assert len(a) == len(b) > 0, f"{what}: rows"
     for col in a.columns:
         av, bv = a[col].to_numpy(), b[col].to_numpy()
         if av.dtype == np.float32:
-            assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (
-                f"col {col} not bit-equal under skew split"
-            )
+            assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (what, col)
         else:
-            assert (
-                (a[col].isna() & b[col].isna()) | (a[col] == b[col])
-            ).all(), f"col {col} mismatch under skew split"
+            assert ((a[col].isna() & b[col].isna()) | (a[col] == b[col])).all(), (
+                what, col,
+            )
 
 
-def test_skew_split_pre_epoch_uses_floor_mod_day_keys(spark):
-    """Pre-1970 timestamps in a hot chunk must split at FLOOR day
-    boundaries (numpy floor-mod, the kernel's rule — see rollup kernel's
-    pre-1970 bucket fix): with Spark's sign-of-dividend `%`, a negative
-    _ts_us maps to the NEXT day's key unless it sits exactly on midnight,
-    so one UTC day's rows would land in two kernel groups and a day-nested
-    output bucket would be emitted twice."""
-    from olympian_spark.operators.rollup import _DAY_US, _skew_split_chunk
+def test_int64_key_cascade_matches_string_key(spark):
+    """The tier kernels must honour int64 conv keys (the dictionary-encoded
+    path COVERAGE.md advertises): rollup_tiers_fused run with int64 keys
+    bit-matches the string-key run after key remap at all three grains, and
+    so does rollup_coarser(..., "month") over the int64 tier_1d. Guards the
+    kernels' conv_id output arrays against a hard-coded string type —
+    round-2's rollup_coarser regression was exactly that."""
+    df = spark.createDataFrame(gen_transcripts(8_000, 24, seed=7).to_pandas())
+    slim = qc_flags(df, PARAMS).select(*SLIM_COLS).persist()
+    # deterministic string -> int64 dictionary encoding
+    mapping = slim.select("conv_id").distinct().withColumn(
+        "conv_int", F.xxhash64("conv_id")
+    ).persist()
+    str_tagged = rollup_tiers_fused(slim).persist()
+    int_tagged = rollup_tiers_fused(_remap_conv(slim, mapping)).persist()
+    assert dict(int_tagged.dtypes)["conv_id"] == "bigint"
 
-    # one hot (conv, chunk) group spanning pre-epoch days -2 and -1
-    start = -(3 * _DAY_US) // 2  # -1.5 days
-    rows = [("c0", -2 * _DAY_US, start + i * (_DAY_US // 10)) for i in range(10)]
-    base = spark.createDataFrame(rows, "conv_id string, _chunk long, _ts_us long")
-    got = _skew_split_chunk(base, max_chunk_rows=5).collect()
-    assert len(got) == 10
-    for r in got:
-        assert r._chunk == r._ts_us - r._ts_us % _DAY_US, (  # Python % IS floor-mod
-            f"ts {r._ts_us}: got day key {r._chunk}"
+    def pair(str_df, int_df, what):
+        a = _remap_conv(str_df, mapping).orderBy("conv_id", "bucket_start").toPandas()
+        b = int_df.orderBy("conv_id", "bucket_start").toPandas()[a.columns]
+        _assert_frames_bit_equal(a, b, what)
+
+    for grain in (0, 1, 2):
+        pair(
+            str_tagged.filter(f"_grain = {grain}"),
+            int_tagged.filter(f"_grain = {grain}"),
+            f"grain {grain}",
         )
-    assert {r._chunk for r in got} == {-2 * _DAY_US, -1 * _DAY_US}
-
-
-def test_build_tiers_chunk_grain_passthrough_bit_identical(spark):
-    """build_tiers(chunk_grain="day") must produce bit-identical tiers to
-    the default week chunking (day-nested output buckets never straddle a
-    chunk boundary in either grain) — the pipeline-level knob the skew
-    guard exposes for chatty-conversation corpora."""
-    pdf = gen_transcripts(n_turns=8_000, n_convs=30, seed=9).to_pandas()
-    df = spark.createDataFrame(pdf)
-    a = build_tiers(df, PARAMS, persist=False)
-    b = build_tiers(df, PARAMS, persist=False, chunk_grain="day", max_chunk_rows=500)
-    for tier in ("tier_1m", "tier_1h", "tier_1d"):
-        pa_ = a[tier].orderBy("conv_id", "bucket_start").toPandas()
-        pb_ = b[tier].orderBy("conv_id", "bucket_start").toPandas()
-        assert len(pa_) == len(pb_) > 0, tier
-        for col in pa_.columns:
-            av, bv = pa_[col].to_numpy(), pb_[col].to_numpy()
-            if av.dtype == np.float32:
-                assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (tier, col)
-            else:
-                assert (
-                    (pa_[col].isna() & pb_[col].isna()) | (pa_[col] == pb_[col])
-                ).all(), (tier, col)
+    month = [
+        rollup_coarser(t.filter("_grain = 2").drop("_grain"), "month")
+        for t in (str_tagged, int_tagged)
+    ]
+    assert dict(month[1].dtypes)["conv_id"] == "bigint"
+    pair(*month, "month")
+    for d in (str_tagged, int_tagged, slim, mapping):
+        d.unpersist()
 
 
 def test_tier_plan_exchange_budget(spark):
-    """Plan-budget regression pin: a full tier plan (QC windows + fused
-    kernel, persist=False so the WHOLE lineage shows) runs on EXACTLY TWO
-    Exchanges — the pinned stage-1 window shuffle (REPARTITION_BY_NUM, so
-    AQE byte-coalescing cannot starve it) and the kernel's (conv, day)
-    repartition (the conversation-skew spreader). A new shuffle sneaking
-    into the hot path fails this before it costs a benchmark."""
+    """Plan-budget regression pin: a full tier plan (stage-1 gap/dip +
+    fused kernel, persist=False so the WHOLE lineage shows) runs on at most
+    TWO Exchanges — the stage-1 range shuffle on (conv_id, turn_idx) and the
+    kernel's (conv, day) repartition (the conversation-skew spreader), both
+    REPARTITION_BY_NUM so AQE byte-coalescing cannot starve them. A new
+    shuffle sneaking into the hot path fails this before it costs a
+    benchmark."""
     from olympian_spark.datagen import gen_transcripts
     from olympian_spark.plans.pipeline import QcParams, build_tiers
 
@@ -459,29 +356,34 @@ def test_tier_plan_exchange_budget(spark):
         assert n <= 2, f"{name}: {n} exchanges (budget 2)\n{plan[:1500]}"
 
 
-def test_build_tiers_fused_bit_identical_to_cascade(spark):
-    """build_tiers(fused=True) — the assume_clustered streaming path riding
-    the stage-1 window exchange — must be bit-identical to the explicit
-    cascade (fused=False), which repartitions independently and never
-    relies on input order. Guards the order-dependent contract between
-    qc_flags' window layout and the fused kernel."""
-    from olympian_spark.datagen import gen_transcripts
-    from olympian_spark.plans.pipeline import QcParams, build_tiers
-
-    pdf = gen_transcripts(n_turns=15_000, n_convs=40, seed=23).to_pandas()
-    df = spark.createDataFrame(pdf)
-    params = QcParams(dip_high=300.0, dip_max=1200.0)
-    a = build_tiers(df, params, persist=False, fused=True)
-    b = build_tiers(df, params, persist=False, fused=False)
-    for tier in ("tier_1m", "tier_1h", "tier_1d"):
-        pa_ = a[tier].orderBy("conv_id", "bucket_start").toPandas()
-        pb_ = b[tier].orderBy("conv_id", "bucket_start").toPandas()
-        assert len(pa_) == len(pb_) > 0, tier
-        for col in pa_.columns:
-            av, bv = pa_[col].to_numpy(), pb_[col].to_numpy()
-            if av.dtype == np.float32:
-                assert (av.view(np.uint32) == bv.view(np.uint32)).all(), (tier, col)
-            else:
-                assert (
-                    (pa_[col].isna() & pb_[col].isna()) | (pa_[col] == pb_[col])
-                ).all(), (tier, col)
+def test_fused_pre_epoch_days_route_by_floor_mod(spark):
+    """Pre-1970 turns: Spark-side pmod picks the kernel partition and numpy
+    floor-mod the in-kernel day segment. If the two rules disagreed (e.g.
+    Spark's sign-of-dividend `%`, which sends a turn sitting exactly on a
+    pre-epoch midnight to another key than the rest of its day), one UTC
+    day's rows would reach two kernel segments and its buckets would be
+    emitted twice."""
+    # ~2.5 days of turns from 1969-12-30 00:00, both pre-epoch midnights
+    # included exactly
+    secs = np.unique(np.concatenate((
+        [0, 86_400], np.random.default_rng(5).integers(1, 216_000, 358)
+    )))
+    n = secs.size
+    pdf = pd.DataFrame({
+        "conv_id": "c0",
+        "turn_idx": np.arange(n, dtype=np.int64),
+        "ts": pd.Timestamp("1969-12-30") + pd.to_timedelta(secs, unit="s"),
+        "role": "user",
+        "tool": "none",
+        "text": ["x" * (i % 7) for i in range(n)],
+    })
+    assert pdf["ts"].iloc[-1] >= pd.Timestamp("1970-01-01")
+    slim = qc_flags(spark.createDataFrame(pdf), PARAMS).select(*SLIM_COLS)
+    got = rollup_tiers_fused(slim).toPandas()
+    got["bucket_us"] = _us(got["bucket_start"])
+    for grain, rows in got.groupby("_grain"):
+        assert not rows.duplicated(["conv_id", "bucket_us"]).any(), f"grain {grain}"
+        assert rows["n_turns"].sum() == n, f"grain {grain}"
+    days = got.loc[got["_grain"] == 2, "bucket_us"]
+    assert (days % DAY_US == 0).all()
+    assert set(days) == {-2 * DAY_US, -DAY_US, 0}
